@@ -1,6 +1,6 @@
 # Packaging + verification for the PySpark fulltext engine.
 
-.PHONY: pyfiles test verify bench scaling clean
+.PHONY: pyfiles test verify bench bench-serve bench-test scaling clean
 
 # Zip the package for spark-submit --py-files (BASELINE.json:14).
 pyfiles:
@@ -18,6 +18,14 @@ verify:
 
 bench:
 	python bench.py
+
+# One side of a serve A/B (perfbench/README.md): make bench-serve SEED=N
+bench-serve:
+	python3 perfbench/run.py --workload serve --seed $(SEED) --seconds 10 --trace 0
+
+# The benchmark's own tests (no Spark).
+bench-test:
+	python3 -m pytest perfbench/test_perfbench.py -q
 
 scaling:
 	python scripts/scaling_bench.py

@@ -51,7 +51,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, IndexConfig
@@ -103,13 +103,17 @@ def _range_max(st: list[np.ndarray], lo: np.ndarray, hi: np.ndarray) -> np.ndarr
 
 
 class _TermBlocks:
-    """All candidate blocks of one term within the group, sorted by
-    first_doc (disjoint doc ranges within a term). Decode is BATCHED:
-    a hot term at corpus scale spans thousands of blocks, and the
-    ~0.15 ms fixed cost of a per-block decode call was the serving
-    tier's scale bound (measured: 'the' over 1.28M docs = 7,681 blocks
-    = 1.1 s of pure per-block overhead); pfor_decode_many amortizes it
-    to one numpy pass over all needed blocks."""
+    """All candidate blocks of one term within one range, as array slices
+    sorted by first_doc (disjoint doc ranges within a term). Built only
+    from ``_SortedBlocks`` runs: a pandas frame per (range, term) cost 8
+    column reads each, ~8,300 pandas calls for the ~1,040 terms of a
+    1000-query batch, a fixed cost per term on top of the BM25 work.
+    Decode is BATCHED: a hot term at corpus
+    scale spans thousands of blocks, and the ~0.15 ms fixed cost of a
+    per-block decode call was the serving tier's scale bound (measured:
+    'the' over 1.28M docs = 7,681 blocks = 1.1 s of pure per-block
+    overhead); pfor_decode_many amortizes it to one numpy pass over all
+    needed blocks."""
 
     __slots__ = (
         "idf", "first", "last", "bmax", "n_docs",
@@ -117,16 +121,25 @@ class _TermBlocks:
         "decoded_blocks",
     )
 
-    def __init__(self, idf: float, pdf: pd.DataFrame):
-        order = np.argsort(pdf["first_doc"].to_numpy(), kind="stable")
+    def __init__(
+        self,
+        idf: float,
+        first: np.ndarray,
+        last: np.ndarray,
+        block_max_tf_norm: np.ndarray,
+        n_docs: np.ndarray,
+        doc_bytes: np.ndarray,
+        tf_bytes: np.ndarray,
+        dl_bytes: np.ndarray,
+    ):
         self.idf = idf
-        self.first = pdf["first_doc"].to_numpy()[order]
-        self.last = pdf["last_doc"].to_numpy()[order]
-        self.bmax = idf * pdf["block_max_tf_norm"].to_numpy()[order].astype(np.float64)
-        self.n_docs = pdf["n_docs"].to_numpy()[order].astype(np.int64)
-        self.doc_bytes = pdf["doc_bytes"].to_numpy()[order]
-        self.tf_bytes = pdf["tf_bytes"].to_numpy()[order]
-        self.dl_bytes = pdf["dl_bytes"].to_numpy()[order]
+        self.first = first
+        self.last = last
+        self.bmax = idf * block_max_tf_norm.astype(np.float64)
+        self.n_docs = n_docs.astype(np.int64)
+        self.doc_bytes = doc_bytes
+        self.tf_bytes = tf_bytes
+        self.dl_bytes = dl_bytes
         self._cache: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         self._concat: dict[bytes, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         self.decoded_blocks = 0
@@ -348,12 +361,52 @@ def _bmw_topk(
 # --- the Spark surface --------------------------------------------------------
 
 
+# _TermBlocks constructor arguments, in order.
+_BLOCK_COLS = (
+    "first_doc", "last_doc", "block_max_tf_norm", "n_docs",
+    "doc_bytes", "tf_bytes", "dl_bytes",
+)
+
+
+class _SortedBlocks:
+    """A frame of blocks as NumPy columns, sorted ONCE by (range_bucket,
+    term, first_doc), with each (range, term) run found by NumPy:
+    ``runs[range_bucket][term]`` is the run's slice, and
+    ``term_blocks`` hands its array slices to ``_TermBlocks``. This is
+    how both kernels build term blocks — one column read per column per
+    frame, not one per (range, term) group."""
+
+    def __init__(self, pdf: pd.DataFrame, extra: tuple[str, ...] = ()):
+        codes, names = pd.factorize(pdf["term"].to_numpy(), sort=True)
+        rb = pdf["range_bucket"].to_numpy()
+        order = np.lexsort((pdf["first_doc"].to_numpy(), codes, rb))
+        self.cols = {c: pdf[c].to_numpy()[order] for c in _BLOCK_COLS + extra}
+        rb, codes = rb[order], codes[order]
+        cut = np.flatnonzero((rb[1:] != rb[:-1]) | (codes[1:] != codes[:-1])) + 1
+        starts = np.concatenate(([0], cut))
+        ends = np.concatenate((cut, [len(order)]))
+        self.runs: dict[int, dict[str, slice]] = {}
+        for s, e, r, c in zip(
+            starts.tolist(), ends.tolist(),
+            rb[starts].tolist(), codes[starts].tolist(),
+        ):
+            self.runs.setdefault(r, {})[names[c]] = slice(s, e)
+
+    def term_blocks(self, idf: float, run: slice) -> _TermBlocks:
+        return _TermBlocks(idf, *(self.cols[c][run] for c in _BLOCK_COLS))
+
+
 def _wand_factory(k: int, avgdl: float):
+    """SHUFFLE-path kernel: one (query, range) group per call."""
+
     def wand(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
+        blocks = _SortedBlocks(pdf, extra=("idf",))
+        idf = blocks.cols["idf"]
         terms = [
-            _TermBlocks(float(g["idf"].iloc[0]), g)
-            for _, g in pdf.groupby("term", sort=True)
+            blocks.term_blocks(float(idf[run.start]), run)
+            for term_runs in blocks.runs.values()
+            for _, run in sorted(term_runs.items())
         ]
         docs, scores = _bmw_topk(terms, k, avgdl)
         total = int(len(pdf))
@@ -382,19 +435,27 @@ def _wand_partition_factory(plan: list[tuple[int, dict[str, float]]], k: int, av
     partition. ``plan`` = [(query_id, {term: idf})] travels in the
     closure (bytes-tiny), so no join ever touches the blocks. Blocks of
     one range_bucket are guaranteed co-partitioned (session-load
-    repartition), so each (query, range) WAND here is exact."""
+    repartition), so each (query, range) WAND here is exact. The
+    partition is sorted once (``_SortedBlocks``) and each (range, term)
+    is a slice of it. Per-range and per-term ``groupby`` frames cost
+    more: on a 1000-query batch over one range (1,036 terms, 1,874
+    blocks, 4-core host) the kernel alone ran 1.34-1.39 s with them and
+    1.05-1.21 s with slices, median of 5 in-process runs each."""
+    # Terms in name order: the kernel sums contributions term by term,
+    # so a fixed order keeps scores bit-identical across tiers.
+    plan = [(qid, sorted(tidf.items())) for qid, tidf in plan]
 
     def run(batches):
         parts = [p for p in batches if len(p)]
         if not parts:
             return
         pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-        out = {
+        blocks = _SortedBlocks(pdf)
+        out: dict[str, list[np.ndarray]] = {
             "query_id": [], "doc_id": [], "score": [],
             "blocks_total": [], "blocks_decoded": [],
         }
-        for rb, grb in pdf.groupby("range_bucket", sort=False):
-            term_groups = dict(tuple(grb.groupby("term", sort=True)))
+        for term_runs in blocks.runs.values():
             # One _TermBlocks per (range, term), shared across the whole
             # query plan: a term's idf is query-independent, and sharing
             # keeps the per-block decode cache warm — a 25-query batch
@@ -402,13 +463,13 @@ def _wand_partition_factory(plan: list[tuple[int, dict[str, float]]], k: int, av
             tb_cache: dict[str, _TermBlocks] = {}
             for qid, tidf in plan:
                 terms = []
-                for t in sorted(tidf):
-                    if t not in term_groups:
-                        continue
+                for t, idf in tidf:
                     tb = tb_cache.get(t)
                     if tb is None:
-                        tb = _TermBlocks(tidf[t], term_groups[t])
-                        tb_cache[t] = tb
+                        run_ = term_runs.get(t)
+                        if run_ is None:
+                            continue
+                        tb = tb_cache[t] = blocks.term_blocks(idf, run_)
                     terms.append(tb)
                 if not terms:
                     continue
@@ -422,25 +483,39 @@ def _wand_partition_factory(plan: list[tuple[int, dict[str, float]]], k: int, av
                 n = len(docs)
                 if n == 0:
                     continue
-                total = int(sum(len(t.first) for t in terms))
-                decoded = int(sum(t.decoded_blocks for t in terms) - before)
-                out["query_id"].extend([qid] * n)
-                out["doc_id"].extend(docs.astype(np.int64).tolist())
-                out["score"].extend(scores.tolist())
-                out["blocks_total"].extend([total] * n)
-                out["blocks_decoded"].extend([decoded] * n)
+                total = sum(len(t.first) for t in terms)
+                decoded = sum(t.decoded_blocks for t in terms) - before
+                out["query_id"].append(np.full(n, qid, dtype=np.int32))
+                out["doc_id"].append(docs.astype(np.int64))
+                out["score"].append(scores)
+                out["blocks_total"].append(np.full(n, total, dtype=np.int64))
+                out["blocks_decoded"].append(np.full(n, decoded, dtype=np.int64))
         if out["query_id"]:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.asarray(out["query_id"], dtype=np.int32),
-                    "doc_id": np.asarray(out["doc_id"], dtype=np.int64),
-                    "score": np.asarray(out["score"], dtype=np.float64),
-                    "blocks_total": np.asarray(out["blocks_total"], dtype=np.int64),
-                    "blocks_decoded": np.asarray(out["blocks_decoded"], dtype=np.int64),
-                }
-            )
+            yield pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
 
     return run
+
+
+def _isin(column: str, values: list) -> Column:
+    """``column IN (values)`` for str or int values, built with ONE Py4J
+    call. ``Column.isin`` makes one JVM round trip per value
+    (``_create_column_from_literal``): for the 1,036 terms and 16 term
+    buckets of a 1000-query batch it took 0.40 s, against 3 ms here
+    (4-core host). Here the list is one SQL expression parsed in the
+    JVM. Strings travel as hex UTF-8
+    binary literals cast to STRING, so no character (quote, backslash,
+    non-ASCII) is ever escaped and the result does not depend on the
+    parser's escape settings; the cast is constant-folded, so the plan
+    holds the same literal IN-list / InSet as ``isin``."""
+    if not values:
+        return F.lit(False)
+    lits = ", ".join(
+        f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+        if isinstance(v, str)
+        else str(int(v))
+        for v in values
+    )
+    return F.expr(f"`{column}` IN ({lits})")
 
 
 _SEG_COLS = [
@@ -623,7 +698,11 @@ class SearchSession:
             # FAST path: plan in the closure, one narrow stage over the
             # range-partitioned resident segments. The term IN-list filter
             # is evaluated against cached-batch stats (and against parquet
-            # row groups when uncached).
+            # row groups when uncached). Both IN-lists go through _isin,
+            # one Py4J call each: Column.isin's call per value (~0.4 ms)
+            # was the driver's largest per-term cost on a 1000-query
+            # batch, and the kernel's per-term pandas frames the
+            # executor's (see _wand_partition_factory).
             # One linear pass over qterms, not a rescan per query id —
             # the old per-qid comprehension was O(Q^2 * T) on the driver
             # and would dwarf the narrow-stage win at 10k-query batches.
@@ -632,9 +711,8 @@ class SearchSession:
                 if t in idf_of:
                     by_qid.setdefault(q, {})[t] = idf_of[t]
             plan = sorted(by_qid.items())
-            terms_lit = sorted(idf_of)
             blocks = self._segments.filter(
-                F.col("term_bucket").isin(buckets) & F.col("term").isin(terms_lit)
+                _isin("term_bucket", buckets) & _isin("term", sorted(idf_of))
             )
             per_range = blocks.mapInPandas(
                 _wand_partition_factory(plan, k, self.avgdl), _WAND_SCHEMA

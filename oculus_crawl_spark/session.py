@@ -15,6 +15,14 @@ import re
 from pyspark.sql import SparkSession
 
 
+def local_cores(master: str) -> int | None:
+    """N of a ``local[N]`` or ``local[N,F]`` master (F = max task
+    failures); None for ``local[*]`` and non-local masters, which leave
+    the core count to Spark or the cluster manager."""
+    m = re.fullmatch(r"local\[(\d+)(?:\s*,\s*\d+)?\]", master)
+    return int(m.group(1)) if m else None
+
+
 def merge_processor_pin(
     master: str, extra_conf: dict[str, str] | None
 ) -> dict[str, str]:
@@ -31,9 +39,9 @@ def merge_processor_pin(
     pins ActiveProcessorCount wins. On a real cluster the resource
     manager sets executor cores and this is inert (no local[k] match)."""
     merged = dict(extra_conf or {})
-    m = re.fullmatch(r"local\[(\d+)\]", master)
-    if m:
-        apc = f"-XX:ActiveProcessorCount={m.group(1)}"
+    cores = local_cores(master)
+    if cores is not None:
+        apc = f"-XX:ActiveProcessorCount={cores}"
         prev = merged.get("spark.driver.extraJavaOptions", "")
         if "ActiveProcessorCount" not in prev:
             merged["spark.driver.extraJavaOptions"] = f"{prev} {apc}".strip()
@@ -61,8 +69,8 @@ def get_spark(
         # cores (AQE coalesces, never widens). Non-local / local[*]
         # masters keep the fixed default — executor counts are the
         # cluster manager's knowledge, not this builder's.
-        m = re.fullmatch(r"local\[(\d+)\]", master)
-        shuffle_partitions = max(32, int(m.group(1))) if m else 32
+        cores = local_cores(master)
+        shuffle_partitions = max(32, cores) if cores is not None else 32
 
     builder = (
         SparkSession.builder.appName(app_name)

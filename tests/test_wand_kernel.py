@@ -4,7 +4,6 @@ mini-corpora (SURVEY.md §5.3), plus block-max soundness."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -18,28 +17,35 @@ BLOCK = 4  # tiny blocks force multi-block lists and real skipping
 def make_term_blocks(
     idf: float, docs: np.ndarray, tfs: np.ndarray, dls: np.ndarray
 ) -> _TermBlocks:
-    rows = []
-    for start in range(0, len(docs), BLOCK):
-        d = docs[start : start + BLOCK]
-        t = tfs[start : start + BLOCK]
-        l = dls[start : start + BLOCK]
-        rows.append(
-            {
-                "first_doc": int(d[0]),
-                "last_doc": int(d[-1]),
-                "n_docs": len(d),
-                # PRODUCTION representation: the admissible float32
-                # (bm25.bmax32), not float64 — a float64 harness never
-                # exercises the cast the build/merge kernels store.
-                "block_max_tf_norm": bm25.bmax32(
-                    bm25.tf_norm(t, l, _AVGDL).max()
-                ),
-                "doc_bytes": encode_doc_gaps(d.astype(np.uint64)),
-                "tf_bytes": pfor_encode(t.astype(np.uint64)),
-                "dl_bytes": pfor_encode(l.astype(np.uint64)),
-            }
-        )
-    return _TermBlocks(idf, pd.DataFrame(rows))
+    starts = range(0, len(docs), BLOCK)
+    d = [docs[s : s + BLOCK] for s in starts]
+    t = [tfs[s : s + BLOCK] for s in starts]
+    l = [dls[s : s + BLOCK] for s in starts]
+    return _TermBlocks(
+        idf,
+        first=np.array([int(b[0]) for b in d], dtype=np.int64),
+        last=np.array([int(b[-1]) for b in d], dtype=np.int64),
+        # PRODUCTION representation: the admissible float32
+        # (bm25.bmax32), not float64 — a float64 harness never
+        # exercises the cast the build/merge kernels store.
+        block_max_tf_norm=np.array(
+            [
+                bm25.bmax32(bm25.tf_norm(bt, bl, _AVGDL).max())
+                for bt, bl in zip(t, l)
+            ],
+            dtype=np.float32,
+        ),
+        n_docs=np.array([len(b) for b in d], dtype=np.int64),
+        doc_bytes=np.array(
+            [encode_doc_gaps(b.astype(np.uint64)) for b in d], dtype=object
+        ),
+        tf_bytes=np.array(
+            [pfor_encode(b.astype(np.uint64)) for b in t], dtype=object
+        ),
+        dl_bytes=np.array(
+            [pfor_encode(b.astype(np.uint64)) for b in l], dtype=object
+        ),
+    )
 
 
 _AVGDL = 10.0
@@ -132,7 +138,16 @@ def test_term_blocks_decode_blocks_cache_mixing():
     pdf = pd.DataFrame(rows)
 
     def fresh():
-        return _TermBlocks(1.5, pdf)
+        return _TermBlocks(
+            1.5,
+            first=pdf["first_doc"].to_numpy(),
+            last=pdf["last_doc"].to_numpy(),
+            block_max_tf_norm=pdf["block_max_tf_norm"].to_numpy(),
+            n_docs=pdf["n_docs"].to_numpy(),
+            doc_bytes=pdf["doc_bytes"].to_numpy(),
+            tf_bytes=pdf["tf_bytes"].to_numpy(),
+            dl_bytes=pdf["dl_bytes"].to_numpy(),
+        )
 
     all_idx = np.arange(12, dtype=np.int64)
     ref = fresh().decode_blocks(all_idx)
